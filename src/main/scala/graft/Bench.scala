@@ -437,9 +437,11 @@ object Bench {
     // steady-state probe, and the one-time per-release build cost is
     // visible instead of folded into whichever query ran first — the
     // reference's own metadata-phase / query-phase split
-    // (v1/src/main.rs:118-133 vs 137-156).
-    val buildResults = graft.queries.ExtensionCatalog.stagedBuilds
-      .map { case (label, f) => label -> runThunk(label)(f(spark, sfDir)) }
+    // (v1/src/main.rs:118-133 vs 137-156). Staging.all lists the shared
+    // templates before the lifecycles that fork them, so each row bills
+    // only its own build.
+    val buildResults = graft.queries.Staging.all
+      .map(st => st.label -> runThunk(st.label)(st(spark, sfDir)))
     val queryResults = names.map(n => n -> run(n))
     // Steady-state streaming serving rows AFTER the batch sweep (VERDICT
     // r12 #6): real Structured Streaming queries (ANN serving against the
@@ -465,7 +467,7 @@ object Bench {
         math.ceil(ds.size * 0.95).toInt - 1))
       (label, r, p50, p95)
     }
-    val streamRowsFirst = graft.queries.ExtensionCatalog.streamingBench
+    val streamRowsFirst = graft.queries.Staging.streamingBench
       .map { case (label, f) => runStream(label, f) }
 
     // ---- Bounded weather-retry pass (VERDICT r14 #1/#2) ----------------
@@ -520,7 +522,7 @@ object Bench {
         System.err.println(f"[bench] retrying $label: trigger p50 $p50%.2f s " +
           f"vs committed ${ref.get}%.2f s")
         val again = runStream(label,
-          graft.queries.ExtensionCatalog.streamingBench.toMap.apply(label))
+          graft.queries.Staging.streamingBench.toMap.apply(label))
         retryBudgetSec -= again._2.wallSec
         // p50 == 0.0 means the retry's trigger events missed the drain
         // window (median of empty) — a bogus zero-latency row must never
@@ -630,7 +632,7 @@ object Bench {
           .map(java.nio.file.Files.size(_)).sum
         finally walk.close() // Files.walk holds open directory handles
       } catch { case scala.util.control.NonFatal(_) => 0L }
-    val indexMb = graft.queries.ExtensionCatalog.stagedIndexPaths(sfDir)
+    val indexMb = graft.queries.Staging.paths(sfDir)
       .map { case (k, p) => "\"" + k + "\":" + round(dirBytes(p) / 1e6, 10) }
       .mkString("{", ",", "}")
     // Host-health summary from the run's own 1 Hz timeline — the
@@ -666,7 +668,7 @@ object Bench {
     // space, measured AFTER the sweep so the probe write never bills to a
     // query row — a degraded driver host (the round-11 collapsed-tmpdir
     // postmortem) is now self-evident from this one artifact.
-    val scratchDir = graft.queries.ExtensionCatalog.scratchBase
+    val scratchDir = graft.queries.Staging.scratchBase
     val scratchColdGbps = graft.metrics.DiskProbe.deviceColdGbps(scratchDir)
     val scratchFreeGb =
       try new java.io.File(scratchDir).getUsableSpace / 1e9

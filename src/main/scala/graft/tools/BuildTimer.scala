@@ -3,25 +3,15 @@ package graft.tools
 import graft.GraftSession
 import org.apache.spark.sql.functions._
 
-/** Dev tool: time a staged-index BUILD repeatedly with a fresh output dir
-  * per rep (the catalog's stagedBuilds memoize per fixture dir, so Bench
-  * rows can't be re-run in one JVM — this calls the Layouts builders
-  * directly). args:
-  * <ivf|ivf2|posting|minhash|jaccard|compact|rebuild_grown> <sfDir>
-  * [reps]. Prints per-rep walls and the median, Bench-style
-  * (cache-clear + GC between reps). `compact` times ONLY the
-  * minhashCompact rebase over a per-rep fresh x155-shaped grown index
-  * (gen-0 build + gen-1 ADMITTED append, both untimed); `rebuild_grown`
-  * times the from-scratch build over the same grown corpus — together
-  * the measured form of SCALING.md's O(index)-vs-O(corpus) rebase
-  * claim.
-  *
-  * Each variant reproduces ITS bench row's exact inputs and knobs
-  * (ExtensionCatalog's staged builders: posting over the full corpus,
-  * the two ingest indexes over the EVEN doc half, all three with 256 KB
-  * groups / 2000-row pages) — this tool exists to cross-check those
-  * rows, so a mismatched corpus or layout knob would produce a wrong
-  * parity verdict (review r14).
+/** Dev tool: the x155 rebase A/B, timed repeatedly with a fresh output
+  * dir per rep. args: <compact|rebuild_grown> <sfDir> [reps]. Prints
+  * per-rep walls and the median, Bench-style (cache-clear + GC between
+  * reps). `compact` times ONLY the minhashCompact rebase over a per-rep
+  * fresh x155-shaped grown index (gen-0 build + gen-1 ADMITTED append,
+  * both untimed); `rebuild_grown` times the from-scratch build over the
+  * same grown corpus — together the measured form of SCALING.md's
+  * O(index)-vs-O(corpus) rebase claim. To time a staged build itself,
+  * run `StageProfile <sfDir> build_x… [reps]`, which times the real stage.
   */
 object BuildTimer {
   def main(args: Array[String]): Unit = {
@@ -31,11 +21,7 @@ object BuildTimer {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.build("graft-buildtimer", cores = cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val emb = GraftSession.table(spark, sfDir, "embeddings").where(col("vec_id") >= 10)
-    // x101's posting index stages over the FULL corpus; the two ingest
-    // indexes (x117/x139) stage over the even "existing" half
     val docs = GraftSession.table(spark, sfDir, "documents")
-    val evenDocs = docs.where(col("doc_id") % 2 === 0)
     def freshOut(): String = java.nio.file.Files.createTempDirectory(
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get("target/graft-scratch")), s"buildtimer-$which").toString
@@ -88,16 +74,6 @@ object BuildTimer {
       }
       val t0 = System.nanoTime()
       which match {
-        case "ivf" => graft.sources.Layouts.ivfIndex(emb, out,
-          centModulo = 50, twoLevel = Some(false))
-        case "ivf2" => graft.sources.Layouts.ivfIndex(emb, out,
-          centModulo = 50, twoLevel = Some(true))
-        case "posting" => graft.sources.Layouts.postingIndex(docs, out,
-          groupBytes = 256L * 1024, pageRows = 2000)
-        case "minhash" => graft.sources.Layouts.minhashIndex(evenDocs, out,
-          groupBytes = 256L * 1024, pageRows = 2000)
-        case "jaccard" => graft.sources.Layouts.jaccardIndex(evenDocs, out,
-          groupBytes = 256L * 1024, pageRows = 2000)
         // the x155 A/B pair: the rebase alone (corpus never rescanned)
         // vs the from-scratch rebuild over the same grown corpus — the
         // measured form of SCALING.md's O(index) vs O(corpus) claim

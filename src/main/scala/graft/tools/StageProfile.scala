@@ -2,13 +2,16 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 
-/** Dev tool: run one catalog query (or staged build, with the `build_`
-  * prefix) and print a per-stage attribution table from the listener bus —
+/** Dev tool: run one catalog query (or staged build, by its `build_*`
+  * label) and print a per-stage attribution table from the listener bus —
   * stage wall span, executor run/CPU time, task count, shuffle bytes, and
   * the first line of the stage's call site. The missing middle between
   * TimeQuery's one wall number and the full Bench run: says WHERE a row's
   * time goes (which exchange, which scan, codegen-heavy stage) without a
-  * UI. args: <sfDir> <name> [reps]
+  * UI. A build rep times [[graft.queries.Stage.fresh]], a new build into a
+  * new scratch dir, after one untimed build that also forces the
+  * templates the stage forks — so every rep times the stage's own work,
+  * as its bench row does. args: <sfDir> <name> [reps]
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
@@ -46,8 +49,10 @@ object StageProfile {
 
     val thunk: () => Unit =
       if (name.startsWith("build_")) {
-        val b = graft.queries.ExtensionCatalog.stagedBuilds.toMap.apply(name)
-        () => b(spark, sfDir)
+        val st = graft.queries.Staging.all.find(_.label == name)
+          .getOrElse(sys.error(s"unknown build $name"))
+        st(spark, sfDir)
+        () => st.fresh(spark, sfDir)
       } else { () =>
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()

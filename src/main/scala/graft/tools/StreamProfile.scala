@@ -47,7 +47,7 @@ object StreamProfile {
           }
         }
       })
-    val thunk = graft.queries.ExtensionCatalog.streamingBench.toMap
+    val thunk = graft.queries.Staging.streamingBench.toMap
       .getOrElse(row, sys.error(s"unknown streaming row $row"))
     val reps = sys.env.getOrElse("GRAFT_PROFILE_REPS", "2").toInt
     (1 to reps).foreach { i =>
