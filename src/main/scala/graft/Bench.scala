@@ -1,4 +1,5 @@
 package graft
+import graft.queries.Staging
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every catalog query against SPARK_GRAFT_SF_DIR,
@@ -315,21 +316,13 @@ object Bench {
         }
       val wall = (System.nanoTime() - t0) / 1e9
       val cpu = (osBean.getProcessCpuTime - c0) / 1e9
-      // listener events post asynchronously; wait for the bus to go quiet
-      // (two consecutive equal reads) so straggler task-end bytes bill to
-      // this query, not the next — capped so a busy bus can't stall the
-      // run, and typically one 10 ms beat instead of a flat 50 ms × 171
-      // thunks (~8.5 s of dead wall time per bench run)
-      // ... on ALL the billed counters: a final stage that only writes
-      // (inputs zero, e.g. an index build's commit stage) would otherwise
-      // read as drained while its output/shuffle events are still queued
-      var drained = false
-      var waited = 0
-      while (!drained && waited < 100) {
-        val before = (inputBytes.get(), outputBytes.get(), shuffleBytes.get())
-        Thread.sleep(10); waited += 10
-        drained = (inputBytes.get(), outputBytes.get(), shuffleBytes.get()) == before
-      }
+      // listener events post asynchronously: drain the bus so straggler
+      // task-end bytes (and streaming progress events, which ride the same
+      // bus) bill to this row, not the next; a drain past Spark's 10 s bound
+      // costs the row its exact byte counters, not the run its artifact line
+      try org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
+      catch { case e: java.util.concurrent.TimeoutException =>
+        System.err.println(s"[bench] $label: listener bus not drained: $e") }
       R(wall, cpu, math.max(rssMax.get() / 1000.0, rssMb()),
         inputBytes.get() / 1e6, outputBytes.get() / 1e6,
         shuffleBytes.get() / 1e6,
@@ -403,11 +396,11 @@ object Bench {
       warm("minhash") {
         val docs = spark.read.parquet(s"$wd/documents.parquet")
         graft.sources.Layouts.minhashIndex(docs, s"$wtmp/mh",
-          groupBytes = 256L * 1024, pageRows = 2000)
+          groupBytes = Staging.GroupBytes, pageRows = Staging.PageRows)
         graft.sources.Layouts.jaccardIndex(docs, s"$wtmp/jac",
-          groupBytes = 256L * 1024, pageRows = 2000)
+          groupBytes = Staging.GroupBytes, pageRows = Staging.PageRows)
         graft.sources.Layouts.postingIndex(docs, s"$wtmp/post",
-          groupBytes = 256L * 1024, pageRows = 2000)
+          groupBytes = Staging.GroupBytes, pageRows = Staging.PageRows)
       }
       // the r17.5 build families (BM25 tokenize/tf/window + champion
       // select + delta merge, positional posexplode) joined the timed
@@ -418,13 +411,13 @@ object Bench {
         val docs = spark.read.parquet(s"$wd/documents.parquet")
         graft.sources.Layouts.bm25Index(docs.where(
             org.apache.spark.sql.functions.expr("doc_id % 2 = 0")),
-          s"$wtmp/bm25", groupBytes = 256L * 1024, pageRows = 2000)
+          s"$wtmp/bm25", groupBytes = Staging.GroupBytes, pageRows = Staging.PageRows)
         graft.sources.Layouts.bm25Append(docs.where(
             org.apache.spark.sql.functions.expr("doc_id % 2 = 1")),
-          s"$wtmp/bm25", groupBytes = 256L * 1024, pageRows = 2000,
+          s"$wtmp/bm25", groupBytes = Staging.GroupBytes, pageRows = Staging.PageRows,
           batchId = Some("w"))
         graft.sources.Layouts.positionalIndex(docs, s"$wtmp/pos",
-          groupBytes = 256L * 1024, pageRows = 2000)
+          groupBytes = Staging.GroupBytes, pageRows = Staging.PageRows)
       }
       warm("cleanup") {
         scala.reflect.io.Directory(new java.io.File(wtmp)).deleteRecursively()
@@ -440,7 +433,7 @@ object Bench {
     // (v1/src/main.rs:118-133 vs 137-156). Staging.all lists the shared
     // templates before the lifecycles that fork them, so each row bills
     // only its own build.
-    val buildResults = graft.queries.Staging.all
+    val buildResults = Staging.all
       .map(st => st.label -> runThunk(st.label)(st(spark, sfDir)))
     val queryResults = names.map(n => n -> run(n))
     // Steady-state streaming serving rows AFTER the batch sweep (VERDICT
@@ -451,15 +444,8 @@ object Bench {
     def runStream(label: String, f: (SparkSession, String) => Unit)
         : (String, R, Double, Double) = {
       triggerSecs.clear()
+      // runThunk's drain delivers every progress event of the row
       val r = runThunk(label)(f(spark, sfDir))
-      // progress events post asynchronously; wait for quiescence like
-      // the input-bytes drain above
-      var last = -1
-      var waited = 0
-      while (waited < 100 && triggerSecs.size != last) {
-        last = triggerSecs.size
-        Thread.sleep(10); waited += 10
-      }
       import scala.jdk.CollectionConverters._
       val ds = triggerSecs.asScala.map(_.doubleValue).toSeq.sorted
       val p50 = graft.metrics.Telemetry.median(ds)
@@ -467,7 +453,7 @@ object Bench {
         math.ceil(ds.size * 0.95).toInt - 1))
       (label, r, p50, p95)
     }
-    val streamRowsFirst = graft.queries.Staging.streamingBench
+    val streamRowsFirst = Staging.streamingBench
       .map { case (label, f) => runStream(label, f) }
 
     // ---- Bounded weather-retry pass (VERDICT r14 #1/#2) ----------------
@@ -522,11 +508,11 @@ object Bench {
         System.err.println(f"[bench] retrying $label: trigger p50 $p50%.2f s " +
           f"vs committed ${ref.get}%.2f s")
         val again = runStream(label,
-          graft.queries.Staging.streamingBench.toMap.apply(label))
+          Staging.streamingBench.toMap.apply(label))
         retryBudgetSec -= again._2.wallSec
-        // p50 == 0.0 means the retry's trigger events missed the drain
-        // window (median of empty) — a bogus zero-latency row must never
-        // be adopted as the graded stat (review r15)
+        // p50 == 0.0 means the retry recorded no non-empty trigger
+        // (median of empty) — a bogus zero-latency row must never be
+        // adopted as the graded stat (review r15)
         val keep =
           if (again._3 > 0 && again._3 < p50 && !again._2.failed) again else row
         retriedStreams(label) = (p50, keep._3)
@@ -632,7 +618,7 @@ object Bench {
           .map(java.nio.file.Files.size(_)).sum
         finally walk.close() // Files.walk holds open directory handles
       } catch { case scala.util.control.NonFatal(_) => 0L }
-    val indexMb = graft.queries.Staging.paths(sfDir)
+    val indexMb = Staging.paths(sfDir)
       .map { case (k, p) => "\"" + k + "\":" + round(dirBytes(p) / 1e6, 10) }
       .mkString("{", ",", "}")
     // Host-health summary from the run's own 1 Hz timeline — the
@@ -668,7 +654,7 @@ object Bench {
     // space, measured AFTER the sweep so the probe write never bills to a
     // query row — a degraded driver host (the round-11 collapsed-tmpdir
     // postmortem) is now self-evident from this one artifact.
-    val scratchDir = graft.queries.Staging.scratchBase
+    val scratchDir = Staging.scratchBase
     val scratchColdGbps = graft.metrics.DiskProbe.deviceColdGbps(scratchDir)
     val scratchFreeGb =
       try new java.io.File(scratchDir).getUsableSpace / 1e9

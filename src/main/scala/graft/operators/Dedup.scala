@@ -42,20 +42,15 @@ object Dedup {
   /** Staging barrier for an intermediate consumed by several plan legs
     * (frequency count, prefix explode, verify join): without one Catalyst
     * re-inlines the upstream projection (tokenize + shingle + sort) into
-    * every consumer. Two candidate primitives, A/B'd at 10×/20×
-    * replication (BASELINE.md round 10): eager `localCheckpoint` — one
-    * materialization, lineage truncated, blocks freed by the
-    * ContextCleaner when the RDD is unreferenced — vs lazy `cache()`,
-    * which computes once per consumer *stage set* but pins the cached plan
-    * in the session's storage until someone unpersists (the round-9 leak:
-    * nothing did). Checkpoint won the A/B and is the default; `cache` is
-    * kept behind `-Dgraft.stage.barrier=cache` for re-measurement. The
-    * x73 precedent (corpus-sized staged tables want the checkpoint
-    * barrier) transfers to 100 TB unchanged.
+    * every consumer. Eager `localCheckpoint`: one materialization,
+    * lineage truncated, blocks freed by the ContextCleaner when the RDD is
+    * unreferenced. It beat lazy `cache()` in the 10×/20× replication A/B
+    * (BASELINE.md round 10: −17 % at 20×), and `cache()` also pins the
+    * cached plan in the session's storage until someone unpersists (the
+    * round-9 leak: nothing did). The x73 precedent (corpus-sized staged
+    * tables want the checkpoint barrier) transfers to 100 TB unchanged.
     */
-  private[graft] def stage(df: DataFrame): DataFrame =
-    if (sys.props.get("graft.stage.barrier").contains("cache")) df.cache()
-    else df.localCheckpoint()
+  private[graft] def stage(df: DataFrame): DataFrame = df.localCheckpoint()
 
   /** MinHash signature of length `k` over distinct token-`n`-gram shingle
     * hashes (native expressions: one tight loop per row — see

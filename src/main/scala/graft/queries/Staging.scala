@@ -63,6 +63,14 @@ object Staging {
   def scratchBase: String =
     sys.env.getOrElse("GRAFT_SCRATCH_DIR", "target/graft-scratch")
 
+  /** Fixture-scale index geometry every staged index, appended batch and
+    * compaction is written with: row-group target bytes and rows per page.
+    * Bench's JIT warm-up and BuildTimer use it too, so they exercise and
+    * time the same layouts the stages write.
+    */
+  val GroupBytes: Long = 256L * 1024
+  val PageRows: Int = 2000
+
   private[queries] def stagedScratch(prefix: String): String = {
     val base = java.nio.file.Paths.get(scratchBase)
     try {
@@ -86,7 +94,7 @@ object Staging {
   val x101Posting: Stage =
     stage("build_x101_posting", "graft-posting") { (s, dir, out) =>
       graft.sources.Layouts.postingIndex(t(s, dir, "documents"), out,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -99,7 +107,7 @@ object Staging {
   val x178Bm25Index: Stage =
     stage("build_x178_bm25_index", "graft-bm25") { (s, dir, out) =>
       graft.sources.Layouts.bm25Index(t(s, dir, "documents"), out,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -112,7 +120,7 @@ object Staging {
     stage("build_bm25_template", "graft-bm25g0") { (s, dir, out) =>
       graft.sources.Layouts.bm25Index(
         t(s, dir, "documents").where(col("doc_id") % 3 =!= 2), out,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -126,9 +134,9 @@ object Staging {
       copyIndex(bm25Template(s, dir), out, s)
       val batch = t(s, dir, "documents").where(col("doc_id") % 3 === 2)
       graft.sources.Layouts.bm25Append(batch, out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("g1"))
       graft.sources.Layouts.bm25Append(batch, out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("g1"))
       out
     }
 
@@ -144,7 +152,7 @@ object Staging {
       copyIndex(bm25Template(s, dir), out, s)
       graft.sources.Layouts.bm25Append(
         t(s, dir, "documents").where(col("doc_id") % 3 === 2), out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("gx"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("gx"))
       graft.sources.Layouts.bm25Retract(out, "gx")
       out
     }
@@ -165,12 +173,12 @@ object Staging {
       graft.sources.Layouts.manageBm25(out)
       graft.sources.Layouts.bm25Append(
         t(s, dir, "documents").where(col("doc_id") % 6 === 2), out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("g1"))
       graft.sources.Layouts.bm25Compact(out,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       graft.sources.Layouts.bm25Append(
         t(s, dir, "documents").where(col("doc_id") % 6 === 5), out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g2"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("g2"))
       out
     }
 
@@ -202,7 +210,7 @@ object Staging {
         // maintenance fires with the serving stream LIVE
         graft.sources.Layouts.bm25Append(
           t(s, dir, "documents").where(col("doc_id") % 3 === 2), idx,
-          groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
+          groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("g1"))
         landStaged(part, in, "q1")
         q.processAllAvailable()
       } finally q.stop()
@@ -217,7 +225,7 @@ object Staging {
   val x192Positional: Stage =
     stage("build_x192_positional", "graft-posidx") { (s, dir, out) =>
       graft.sources.Layouts.positionalIndex(t(s, dir, "documents"), out,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -231,13 +239,13 @@ object Staging {
       implicit val sp: SparkSession = s
       graft.sources.Layouts.positionalIndex(
         t(s, dir, "documents").where(col("doc_id") % 2 === 0), out,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       graft.sources.Layouts.manageSortedTable(out)
       val odd = t(s, dir, "documents").where(col("doc_id") % 2 === 1)
       graft.sources.Layouts.positionalAppend(odd, out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("g1"))
       graft.sources.Layouts.positionalAppend(odd, out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("g1"))
       out
     }
 
@@ -253,11 +261,11 @@ object Staging {
       implicit val sp: SparkSession = s
       graft.sources.Layouts.positionalIndex(
         t(s, dir, "documents").where(col("doc_id") % 3 =!= 2), out,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       graft.sources.Layouts.manageSortedTable(out)
       graft.sources.Layouts.positionalAppend(
         t(s, dir, "documents").where(col("doc_id") % 3 === 2), out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("g1"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("g1"))
       val n = graft.sources.Layouts.dropBatch(out, "g1")
       require(n > 0, s"x195 retraction dropped no slices at $out")
       out
@@ -309,7 +317,7 @@ object Staging {
             (col("chunk_no") * 8 + 1).cast("int"), lit(8)), " ").as("chunk_text"))
       graft.sources.Layouts.bm25Index(chunks, out,
         idCol = "chunk_id", textCol = "chunk_text",
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -322,7 +330,7 @@ object Staging {
     stage("build_x139_jaccard_index", "graft-jacidx") { (s, dir, out) =>
       graft.sources.Layouts.jaccardIndex(
         t(s, dir, "documents").where(col("doc_id") % 2 === 0), out,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -356,7 +364,7 @@ object Staging {
     stage("build_x117_minhash_index", "graft-mhidx") { (s, dir, out) =>
       graft.sources.Layouts.minhashIndex(
         t(s, dir, "documents").where(col("doc_id") % 2 === 0), out,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -448,7 +456,7 @@ object Staging {
       // row groups/pages so the probes' pruning actually engages
       graft.sources.Layouts.minhashIndex(
         t(s, dir, "documents").where(col("doc_id") % 3 === 0), out,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -499,9 +507,9 @@ object Staging {
       // DedupSpec's replay case; the gate certifies the grown-index
       // semantics either way.)
       graft.sources.Layouts.minhashAppend(kept1, out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("gen1"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("gen1"))
       graft.sources.Layouts.minhashAppend(kept1, out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("gen1"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("gen1"))
       out
     }
 
@@ -564,7 +572,7 @@ object Staging {
     stage("build_x155_minhash_compact", "graft-mhcpidx") { (s, dir, out) =>
       copyIndex(x153MinhashAppend(s, dir), out, s)
       graft.sources.Layouts.minhashCompact(out,
-        groupBytes = 256L * 1024, pageRows = 2000)(s)
+        groupBytes = GroupBytes, pageRows = PageRows)(s)
       out
     }
 
@@ -595,7 +603,7 @@ object Staging {
     stage("build_posting_even_template", "graft-postg0") { (s, dir, out) =>
       graft.sources.Layouts.postingIndex(
         t(s, dir, "documents").where(col("doc_id") % 2 === 0),
-        out, groupBytes = 256L * 1024, pageRows = 2000)
+        out, groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -611,11 +619,11 @@ object Staging {
       copyIndex(postingEvenTemplate(s, dir), out, s)
       val odd = docs.where(col("doc_id") % 2 === 1)
       graft.sources.Layouts.postingAppend(odd, out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("odd"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("odd"))
       graft.sources.Layouts.postingAppend(odd, out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("odd"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("odd"))
       graft.sources.Layouts.sortedRebase(out, Seq("tri"),
-        groupBytes = 256L * 1024, pageRows = 2000)(s)
+        groupBytes = GroupBytes, pageRows = PageRows)(s)
       out
     }
 
@@ -641,9 +649,9 @@ object Staging {
       // it — the probe then exercises the fully generational fold, not
       // just a slice carry-over
       graft.sources.Layouts.minhashAppend(kept1, out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("gen1"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("gen1"))
       graft.sources.Layouts.minhashCompact(out,
-        groupBytes = 256L * 1024, pageRows = 2000)(s)
+        groupBytes = GroupBytes, pageRows = PageRows)(s)
       out
     }
 
@@ -664,7 +672,7 @@ object Staging {
       val cols = graft.streaming.StreamDedup.docSchema.fieldNames.map(col)
       val q = graft.streaming.StreamDedup.ingestAdmitLoop(
         s, in, idx, s"$base/ledger", s"$base/ckpt",
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       try {
         landFeedFile(docs.where(col("doc_id") % 3 === 1).select(cols: _*),
           s"$base/stage1", in, "g1")
@@ -673,7 +681,7 @@ object Staging {
         // started, its checkpoint open — the quiesce the rename layout
         // required and the manifest layout exists to remove
         graft.sources.Layouts.minhashCompact(idx,
-          groupBytes = 256L * 1024, pageRows = 2000)(s)
+          groupBytes = GroupBytes, pageRows = PageRows)(s)
         landFeedFile(docs.where(col("doc_id") % 3 === 2).select(cols: _*),
           s"$base/stage2", in, "g2")
         q.processAllAvailable()
@@ -693,7 +701,7 @@ object Staging {
       copyIndex(x153MinhashAppend(s, dir), out, s)
       val g2 = t(s, dir, "documents").where(col("doc_id") % 3 === 2)
       graft.sources.Layouts.minhashAppend(g2, out,
-        groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("poison"))
+        groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("poison"))
       graft.sources.Layouts.dropBatch(out, "poison")(s)
       out
     }
@@ -714,7 +722,7 @@ object Staging {
       implicit val sp: SparkSession = s
       val docs = t(s, dir, "documents")
       graft.sources.Layouts.minhashIndex(docs.where(col("doc_id") % 3 === 0),
-        out, groupBytes = 256L * 1024, pageRows = 2000, provenance = true)
+        out, groupBytes = GroupBytes, pageRows = PageRows, provenance = true)
       graft.sources.Layouts.manageMinhash(out)
       val g1 = docs.where(col("doc_id") % 3 === 1)
       val st1 = graft.operators.Dedup.incrementalDedupStaged(
@@ -722,16 +730,16 @@ object Staging {
       val kept1 = g1.join(
         st1.where(col("status") === "kept").select("doc_id"), "doc_id")
       graft.sources.Layouts.minhashAppend(kept1, out,
-        groupBytes = 256L * 1024, pageRows = 2000,
+        groupBytes = GroupBytes, pageRows = PageRows,
         batchId = Some("gen1"), provenance = true)
       graft.sources.Layouts.minhashAppend(
         docs.where(col("doc_id") % 3 === 2), out,
-        groupBytes = 256L * 1024, pageRows = 2000,
+        groupBytes = GroupBytes, pageRows = PageRows,
         batchId = Some("poison"), provenance = true)
       graft.sources.Layouts.minhashCompact(out,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       graft.sources.Layouts.minhashRetractFolded(out, "poison",
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -765,7 +773,7 @@ object Staging {
     stage("build_x163_zorder", "graft-zorder") { (s, dir, out) =>
       graft.sources.Layouts.zordered(t(s, dir, "lineitem"), out,
         "l_extendedprice", "l_quantity",
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -782,7 +790,7 @@ object Staging {
       val docs = t(s, dir, "documents")
       copyIndex(postingEvenTemplate(s, dir), out, s) // shared gen-0
       graft.sources.Layouts.postingAppend(docs.where(col("doc_id") % 2 === 1),
-        out, groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("odd"))
+        out, groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("odd"))
       val n = graft.sources.Layouts.dropBatch(out, "odd")(s)
       require(n == 1, s"posting retract expected to drop 1 slice, dropped $n")
       out
@@ -802,9 +810,9 @@ object Staging {
       copyIndex(postingEvenTemplate(s, dir), out, s) // shared gen-0
       graft.sources.Layouts.managePosting(out)(s)
       graft.sources.Layouts.postingAppend(docs.where(col("doc_id") % 2 === 1),
-        out, groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("odd"))
+        out, groupBytes = GroupBytes, pageRows = PageRows, batchId = Some("odd"))
       graft.sources.Layouts.sortedRebase(out, Seq("tri"),
-        groupBytes = 256L * 1024, pageRows = 2000)(s)
+        groupBytes = GroupBytes, pageRows = PageRows)(s)
       out
     }
 
@@ -880,18 +888,18 @@ object Staging {
       val docs = t(s, dir, "documents")
       graft.sources.Layouts.sortedStats(
         simhashBandRows(docs.where(col("doc_id") % 2 === 0)), out,
-        simhashSortCols, groupBytes = 256L * 1024, pageRows = 2000,
+        simhashSortCols, groupBytes = GroupBytes, pageRows = PageRows,
         partitions = 1, batchId = Some("base"))
       graft.sources.Layouts.manageSortedTable(out)
       graft.sources.Layouts.sortedTableAppend(
         simhashBandRows(docs.where(col("doc_id") % 4 === 1)), out,
-        simhashSortCols, groupBytes = 256L * 1024, pageRows = 2000,
+        simhashSortCols, groupBytes = GroupBytes, pageRows = PageRows,
         batchId = Some("g1"))
       graft.sources.Layouts.sortedRebase(out, simhashSortCols,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       graft.sources.Layouts.sortedTableAppend(
         simhashBandRows(docs.where(col("doc_id") % 4 === 3)), out,
-        simhashSortCols, groupBytes = 256L * 1024, pageRows = 2000,
+        simhashSortCols, groupBytes = GroupBytes, pageRows = PageRows,
         batchId = Some("g3"))
       out
     }
@@ -911,21 +919,21 @@ object Staging {
       graft.sources.Layouts.sortedStats(
         simhashBandRows(docs.where(col("doc_id") % 2 === 0))
           .withColumn("src_batch", lit("base")), out,
-        simhashSortCols, groupBytes = 256L * 1024, pageRows = 2000,
+        simhashSortCols, groupBytes = GroupBytes, pageRows = PageRows,
         partitions = 1, batchId = Some("base"))
       graft.sources.Layouts.manageSortedTable(out)
       graft.sources.Layouts.sortedTableAppend(
         simhashBandRows(docs.where(col("doc_id") % 4 === 1)), out,
-        simhashSortCols, groupBytes = 256L * 1024, pageRows = 2000,
+        simhashSortCols, groupBytes = GroupBytes, pageRows = PageRows,
         batchId = Some("g1"), provenance = true)
       graft.sources.Layouts.sortedTableAppend(
         simhashBandRows(docs.where(col("doc_id") % 4 === 3)), out,
-        simhashSortCols, groupBytes = 256L * 1024, pageRows = 2000,
+        simhashSortCols, groupBytes = GroupBytes, pageRows = PageRows,
         batchId = Some("g3"), provenance = true)
       graft.sources.Layouts.sortedRebase(out, simhashSortCols,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       graft.sources.Layouts.retractFolded(out, "g1", simhashSortCols,
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       out
     }
 
@@ -1055,7 +1063,7 @@ object Staging {
       val cols = graft.streaming.StreamDedup.docSchema.fieldNames.map(col)
       val q = graft.streaming.StreamDedup.ingestAdmitLoop(
         s, in, idx, s"$base/ledger", s"$base/ckpt",
-        groupBytes = 256L * 1024, pageRows = 2000)
+        groupBytes = GroupBytes, pageRows = PageRows)
       try {
         landFeedFile(docs.where(col("doc_id") % 3 === 1).select(cols: _*),
           s"$base/stage1", in, "g1")

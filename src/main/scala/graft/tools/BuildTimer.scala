@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
+import graft.queries.Staging
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the x155 rebase A/B, timed repeatedly with a fresh output
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
   * both untimed); `rebuild_grown` times the from-scratch build over the
   * same grown corpus — together the measured form of SCALING.md's
   * O(index)-vs-O(corpus) rebase claim. To time a staged build itself,
-  * run `StageProfile <sfDir> build_x… [reps]`, which times the real stage.
+  * run `Profile <sfDir> build_x… [reps]`, which times the real stage.
   */
 object BuildTimer {
   def main(args: Array[String]): Unit = {
@@ -46,7 +47,7 @@ object BuildTimer {
         .empty[org.apache.spark.sql.DataFrame]
       if (which == "compact") {
         graft.sources.Layouts.minhashIndex(g0, out,
-          groupBytes = 256L * 1024, pageRows = 2000)
+          groupBytes = Staging.GroupBytes, pageRows = Staging.PageRows)
         val st1 = graft.operators.Dedup.incrementalDedupStaged(
           g1, out, "doc_id", "text", threshold = 0.5)
         val kept1 = g1.join(
@@ -54,7 +55,8 @@ object BuildTimer {
           .localCheckpoint()
         repCheckpoints += kept1
         graft.sources.Layouts.minhashAppend(kept1, out,
-          groupBytes = 256L * 1024, pageRows = 2000, batchId = Some("gen1"))
+          groupBytes = Staging.GroupBytes, pageRows = Staging.PageRows,
+          batchId = Some("gen1"))
       }
       // rebuild_grown's input is the SAME admitted corpus the compact
       // mode's index holds (g0 ∪ kept1, derived untimed via a throwaway
@@ -63,7 +65,7 @@ object BuildTimer {
       if (which == "rebuild_grown") {
         val probeIdx = freshOut()
         graft.sources.Layouts.minhashIndex(g0, probeIdx,
-          groupBytes = 256L * 1024, pageRows = 2000)
+          groupBytes = Staging.GroupBytes, pageRows = Staging.PageRows)
         val st1 = graft.operators.Dedup.incrementalDedupStaged(
           g1, probeIdx, "doc_id", "text", threshold = 0.5)
         rebuildInput = g0.union(g1.join(
@@ -78,9 +80,9 @@ object BuildTimer {
         // vs the from-scratch rebuild over the same grown corpus — the
         // measured form of SCALING.md's O(index) vs O(corpus) claim
         case "compact" => graft.sources.Layouts.minhashCompact(out,
-          groupBytes = 256L * 1024, pageRows = 2000)(spark)
-        case "rebuild_grown" => graft.sources.Layouts.minhashIndex(
-          rebuildInput, out, groupBytes = 256L * 1024, pageRows = 2000)
+          groupBytes = Staging.GroupBytes, pageRows = Staging.PageRows)(spark)
+        case "rebuild_grown" => graft.sources.Layouts.minhashIndex(rebuildInput,
+          out, groupBytes = Staging.GroupBytes, pageRows = Staging.PageRows)
         case other => sys.error(s"unknown build '$other'")
       }
       val w = (System.nanoTime() - t0) / 1e9
